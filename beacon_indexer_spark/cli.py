@@ -218,8 +218,8 @@ def main(
     elif (args.command, args.subcommand) == ("curate", "run"):
         # production curation: the STAGED pipeline (plans/pipeline.py
         # CurationRun) computes LSH→connected-components ONCE and derives
-        # keep-list / manifest / summary from that staged frame — the
-        # standalone oracle queries would rebuild it three times. The
+        # keep-list / manifest / summary from that staged frame (each
+        # standalone oracle query builds its own run for one output). The
         # progress manifest records the run like any transform batch.
         from beacon_indexer_spark.plans.pipeline import CurationRun
 

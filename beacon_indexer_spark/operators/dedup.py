@@ -124,7 +124,15 @@ def minhash_signatures(
     (e.g. a checkpoint shared with an exact-Jaccard side) to skip the
     tokenize+shingle stage here — callers that consume the shingle sets
     AND the signatures pay the regexp-heavy pass once (r13, §1.2).
+    ``text_col`` and ``shingle_n`` are then ignored: the frame's shingles
+    are hashed as given. A frame whose columns are not exactly
+    ``[id_col, "__sh"]`` raises ``ValueError``.
     """
+    if shingled is not None and shingled.columns != [id_col, "__sh"]:
+        raise ValueError(
+            f"minhash_signatures(shingled=...) needs columns "
+            f"[{id_col!r}, '__sh'], got {shingled.columns}"
+        )
     if shingled is None:
         shingled = df.select(
             F.col(id_col).cast("long").alias(id_col),
@@ -654,24 +662,6 @@ def winnow_pairs(
     return counted.filter(F.col("n_shared") >= min_shared)
 
 
-# extra pointer jumps per CC round on the BROADCAST path (see
-# connected_components): each jump is one more probe of the same in-memory
-# broadcast relation (no job, no exchange) and extends path compression from
-# label[label[n]] to label^(1+jumps)[n], cutting the number of serial rounds
-# on chain-shaped components. 0 = the r12 single-jump plan (A/B hook).
-#
-# MEASURED 0 (r13, tools/ab_cc.py interleaved same-JVM, sf0.1, 32 cores):
-# jumps=2 lost on every LSH->CC spine query (+0.43..+0.67 s medians over
-# corpus_dedup_summary / source_token_budget / dedup_cluster_size_dist /
-# split_leakage_guard / doc_keep_list) and jumps=1 lost too (+0.18..+0.54).
-# Dup components on real near-dup corpora are SHALLOW (mostly 2-3 nodes),
-# so extra jumps never cut the round count — they only push |V| more rows
-# per jump through the broadcast join into the min-aggregate every round.
-# The hook + equivalence tests stay so a chain-heavy corpus can flip it
-# after measuring (tools/ab_cc.py).
-_CC_BROADCAST_EXTRA_JUMPS = 0
-
-
 def connected_components(
     pairs: DataFrame,
     id_a: str = "id_a",
@@ -680,7 +670,6 @@ def connected_components(
     node_col: str = "node",
     label_col: str = "cluster_id",
     broadcast_rows: int | None = 4_000_000,
-    extra_jumps: int | None = None,
 ) -> DataFrame:
     """Duplicate-cluster assignment from candidate pairs: (node, cluster_id)
     where cluster_id = the minimum id reachable through the pair graph —
@@ -689,7 +678,9 @@ def connected_components(
     Min-label propagation with pointer jumping: each round every node takes
     the min of its own label, its neighbors' labels, AND its label's label
     (path halving) — convergence in O(log diameter) rounds, so max_iter=25
-    covers any component a dedup job can produce (2^25-hop chains). Raises
+    covers any component a dedup job can produce (2^25-hop chains); one
+    jump per round, since deeper jumps measured slower on the shallow
+    (2-3 node) components of near-dup corpora (r13). Raises
     if the cap is still hit: silently returning partially-converged labels
     would split one duplicate cluster into several. Each round is ONE
     equi-join (the neighbor and pointer-jump lookups union their request
@@ -767,8 +758,6 @@ def connected_components(
     )
     n_labels = int(obs0.get["n"] or 0)
     null_l = F.lit(None).cast(pairs.schema[id_a].dataType)
-    if extra_jumps is None:
-        extra_jumps = _CC_BROADCAST_EXTRA_JUMPS
     for i in range(max_iter):
         # the label frame is node-deduplicated and exactly counted by the
         # previous round's observation — broadcast it into the per-round
@@ -807,39 +796,6 @@ def connected_components(
         looked_up = requests.join(
             lab, requests["__key"] == lab["node"]
         ).select(F.col("__out").alias("node"), "label", "__old")
-        # r13 extra pointer jumps (BROADCAST path only): with the label
-        # frame already an in-memory broadcast relation, each further
-        # label^(j)[n] delivery is one more probe of the SAME broadcast
-        # (ReuseExchange — no new job, no exchange, |V| extra rows into
-        # the existing aggregate) and multiplies per-round path
-        # compression, cutting the count of serial rounds on chain
-        # components. The shuffle fallback keeps the r12 single-jump
-        # plan: there an extra jump would be a full |V| shuffle join per
-        # level — exactly the wrong trade at raw-crawl scale. Depth is
-        # physical-plan-only: any jump depth converges to the same
-        # min-reachable fixpoint, and changed == 0 still certifies the
-        # standard operator's fixpoint (the jump deliveries are a
-        # superset of the standard ones).
-        if bcast and extra_jumps > 0:
-            cur = labels.select(
-                F.col("node").alias("__out"), F.col("label").alias("__key")
-            )
-            # advance to label^2 (already delivered by the main lookup),
-            # then deliver label^3 .. label^(2+extra_jumps)
-            cur = cur.join(lab, cur["__key"] == lab["node"]).select(
-                F.col("__out"), F.col("label").alias("__key")
-            )
-            for _j in range(extra_jumps):
-                cur = cur.join(lab, cur["__key"] == lab["node"]).select(
-                    F.col("__out"), F.col("label").alias("__key")
-                )
-                looked_up = looked_up.unionByName(
-                    cur.select(
-                        F.col("__out").alias("node"),
-                        F.col("__key").alias("label"),
-                        null_l.alias("__old"),
-                    )
-                )
         obs = Observation(f"cc_round_{i}")
         merged = (
             looked_up

@@ -22,6 +22,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
+# centroid count at which the ANN family's coarse assignment switches from
+# the exact flat nearest-of-k scan to the two-level ~2√k scan; the single
+# gate shared by every `hier_threshold` default, `ivf_exact_scored`'s
+# flat-only check and the drift monitor's single-scan path
+_HIER_THRESHOLD = 32
+
 
 def _as_double(arr: Column) -> Column:
     return F.transform(arr, lambda x: x.cast("double"))
@@ -475,7 +481,7 @@ def _coarse_assign(
     centroids: list[tuple[int, list[float]]],
     vec_col: str,
     nprobe: int,
-    hier_threshold: int | None = 32,
+    hier_threshold: int | None = _HIER_THRESHOLD,
     super_probe: int = 1,
 ) -> DataFrame:
     """Coarse-assignment dispatcher shared by the ANN family: flat
@@ -511,7 +517,7 @@ def ivf_topk(
     vec_col: str = "embedding",
     k: int = 10,
     nprobe: int = 2,
-    hier_threshold: int | None = 32,
+    hier_threshold: int | None = _HIER_THRESHOLD,
     super_probe: int = 2,
 ) -> DataFrame:
     """IVF approximate top-k: score only corpus vectors whose inverted list
@@ -590,9 +596,10 @@ def ivf_exact_scored(
     raises rather than silently diverging.
     Returns (query_id, neighbor_id, cos_sim, is_cand, rank, ivf_rank).
     """
-    if len(centroids) >= 32:
+    if len(centroids) >= _HIER_THRESHOLD:
         raise ValueError(
-            "ivf_exact_scored is flat-path only (< 32 centroids); compose "
+            f"ivf_exact_scored is flat-path only (< {_HIER_THRESHOLD} "
+            "centroids); compose "
             "ivf_topk + brute_force_topk for two-level corpora"
         )
     q_scored = F.expr(
@@ -1070,7 +1077,7 @@ def semantic_dedup_keep(
     prefilter_bits: int | None = None,
     prefilter_bands: int = 6,
     dim: int = 64,
-    hier_threshold: int | None = 32,
+    hier_threshold: int | None = _HIER_THRESHOLD,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication ACTION: coarse-cluster the
     embedding space (nearest of k deterministic centroids), score every
@@ -1395,7 +1402,7 @@ def ivfpq_residual_topk(
     vec_col: str = "embedding",
     k: int = 5,
     nprobe: int = 2,
-    hier_threshold: int | None = 32,
+    hier_threshold: int | None = _HIER_THRESHOLD,
     super_probe: int = 2,
 ) -> DataFrame:
     """IVF-PQ over residuals — the production FAISS ``IVFx,PQy`` layout,

@@ -175,29 +175,88 @@ class BeaconPipeline:
         return self.transform_range(raw_table, start_slot, end_slot, mode="overwrite")
 
 
+
+
+def contamination_columns(
+    doc_tokens: str, drop_threshold: float = 0.5, trim_threshold: float = 0.05
+):
+    """``(contam_tokens, contam_rate, verdict)`` columns over a frame that
+    carries the nullable per-doc ``contam_tokens`` coverage and the doc's
+    token count ``doc_tokens`` — the one definition of the
+    decontamination verdict: docs without spans count 0 tokens, 'drop'
+    above ``drop_threshold``, 'trim' at ``trim_threshold`` and up, 'keep'
+    otherwise. ``contam_rate`` is unrounded (callers round for output)."""
+    tokens = F.coalesce("contam_tokens", F.lit(0))
+    rate = tokens / F.greatest(doc_tokens, F.lit(1))
+    verdict = (
+        F.when(rate > drop_threshold, "drop")
+        .when(rate >= trim_threshold, "trim")
+        .otherwise("keep")
+    )
+    return tokens.cast("long"), rate, verdict
+
+
+def covered_tokens(spans: DataFrame) -> DataFrame:
+    """(doc_id, contam_tokens): per-doc sum of the disjoint span lengths
+    of a contamination-span frame."""
+    return spans.groupBy("doc_id").agg(
+        F.sum("n_tokens").cast("long").alias("contam_tokens")
+    )
+
+
+def contamination_verdict(
+    docs: DataFrame,
+    spans: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    drop_threshold: float = 0.5,
+    trim_threshold: float = 0.05,
+) -> DataFrame:
+    """(doc_id, doc_tokens, contam_tokens, contam_rate, verdict): per-doc
+    contaminated-token coverage of ``spans`` (a
+    `cross_corpus_contamination_spans` frame over ``docs``) with the
+    keep/trim/drop policy of `contamination_columns`."""
+    from beacon_indexer_spark.operators.text import token_count
+
+    base = docs.select(
+        F.col(id_col).cast("long").alias("doc_id"),
+        token_count(text_col).cast("long").alias("doc_tokens"),
+    )
+    tokens, rate, verdict = contamination_columns(
+        "doc_tokens", drop_threshold, trim_threshold
+    )
+    return base.join(covered_tokens(spans), "doc_id", "left").select(
+        "doc_id",
+        "doc_tokens",
+        tokens.alias("contam_tokens"),
+        F.round(rate, 6).alias("contam_rate"),
+        verdict.alias("verdict"),
+    )
+
+
 class CurationRun:
-    """The STAGED curation pipeline: compute the LSH→connected-components
+    """The staged curation pipeline: compute the LSH→connected-components
     duplicate-cluster frame ONCE, then derive the keep-list, the curation
-    manifest, and the executive summary from that one staged frame.
+    manifest, the executive summary and the spine reports from that one
+    staged frame.
 
-    The standalone queries (`doc_keep_list`, `doc_curation_manifest`,
-    `corpus_dedup_summary` in plans/queries.py) must each stand alone for
-    the oracle gate, so each re-runs minhash→banding→CC from the raw
-    corpus — on the sf0.1 bench that repeated LSH→CC work is ~10 s of a
-    ~70 s total. A production curation run pays it once: the CC output is
-    already `localCheckpoint`-backed, `broadcast_if_small` probes its row
-    count once (the probe doubles as the materialization job), and every
-    derived frame reads the staged blocks — one signature/banding pass
-    per run, machine-asserted by
+    This class is the single implementation of the curation family: the
+    oracle-gated queries in plans/queries.py (`doc_keep_list`,
+    `doc_keep_best`, `doc_curation_manifest`, `corpus_dedup_summary`,
+    `dedup_cluster_size_dist`, `source_token_budget`,
+    `corpus_dup_rate_by_length`, `split_leakage_guard`,
+    `doc_curation_decision`) each build a run over the documents table
+    and return one method's frame, so the gate pins the production code
+    path directly. A run pays the LSH→CC work once: the CC output is
+    already `localCheckpoint`-backed, it carries its observed row count
+    so `broadcast_if_small` attaches the hint without a probe job, and
+    every derived frame reads the staged blocks — one signature/banding
+    pass per run, machine-asserted by
     tests/test_custom_joins_curation.py::test_curation_run_stages_clusters_once.
-
-    Outputs are column-identical to the standalone queries, so a caller
-    can swap between the audited one-shot queries and the staged run
-    without downstream changes.
 
     With ``test_docs`` set, the run also stages benchmark DECONTAMINATION
     on the same discipline: the contamination-span frame is computed once
-    (lazily, localCheckpoint-backed) and `contamination_spans` /
+    (localCheckpoint-backed) and `contamination_spans` /
     `contamination_verdict` (column-identical to
     `corpus_decontamination_spans` / `doc_contamination_verdict`) and
     `decision` — the manifest extended with the keep/trim/drop verdict
@@ -227,6 +286,7 @@ class CurationRun:
             connected_components,
             minhash_lsh_candidates,
         )
+        from beacon_indexer_spark.session import parallel_build
 
         if keep_policy not in ("min_id", "best_quality"):
             raise ValueError(
@@ -268,94 +328,93 @@ class CurationRun:
             # r12: the two stagings are INDEPENDENT — the LSH→CC cluster
             # chain (bucket probe + per-round CC jobs) and the decon gram
             # join don't read each other — so materialize them from two
-            # driver threads and let the scheduler interleave their jobs
-            # (the overlap-independent-jobs idiom). Each staged frame is
-            # still computed exactly once; only the serial wall-clock of
-            # "clusters, THEN contamination" is removed.
-            from concurrent.futures import ThreadPoolExecutor
+            # driver threads and let the scheduler interleave their jobs.
+            # Each staged frame is still computed exactly once; only the
+            # serial wall-clock of "clusters, THEN contamination" goes.
+            self.clusters, _ = parallel_build(
+                docs.sparkSession, _stage_clusters, self._contamination
+            )
 
-            from pyspark import inheritable_thread_target
-
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                fut_clusters = pool.submit(
-                    inheritable_thread_target(_stage_clusters)
-                )
-                fut_contam = pool.submit(
-                    inheritable_thread_target(self._contamination)
-                )
-                self.clusters = fut_clusters.result()
-                fut_contam.result()
-
-    def _spine(self) -> DataFrame:
-        return self.docs.select(
-            F.col(self.id_col).cast("long").alias(self.id_col)
+    def _resolved(self, *cols) -> DataFrame:
+        """The docs spine (long id + ``cols``) left-joined to the staged
+        cluster frame, with ``cluster_id`` resolved to the doc's own id
+        for docs without duplicates — the base of every per-doc output."""
+        spine = self.docs.select(
+            F.col(self.id_col).cast("long").alias(self.id_col), *cols
+        )
+        cid = F.coalesce(F.col("cluster_id"), F.col(self.id_col))
+        return spine.join(self.clusters, self.id_col, "left").withColumn(
+            "cluster_id", cid.cast("long")
         )
 
-    def _keep_col(self, cid):
-        """The keep verdict under the configured policy, evaluated over a
-        frame that carries ``cid`` (resolved cluster id) and — for
-        ``best_quality`` — a ``q6`` column. ``min_id`` keeps the cluster's
-        minimum id (the CC label, zero extra work); ``best_quality`` keeps
-        the highest-q6 copy (`doc_keep_best`'s Dolma/FineWeb policy) via a
-        per-cluster PARTITIONED window — never global."""
+    def _q6(self):
+        from beacon_indexer_spark.operators.text import quality_score
+
+        return F.round(quality_score(self.text_col), 6).alias("q6")
+
+    def _policy_cols(self) -> list:
+        """Spine columns the keep policy reads (q6 for best_quality)."""
+        return [self._q6()] if self.keep_policy == "best_quality" else []
+
+    def _keep(self):
+        """The keep verdict under the configured policy, over a
+        `_resolved` frame (carrying ``q6`` under ``best_quality``).
+        ``min_id`` keeps the cluster's minimum id (the CC label, zero
+        extra work); ``best_quality`` keeps the highest-q6 copy
+        (`doc_keep_best`'s Dolma/FineWeb policy) via a per-cluster
+        PARTITIONED window — never global."""
         from pyspark.sql import Window
 
         if self.keep_policy == "min_id":
-            return (cid == F.col(self.id_col)).cast("int")
-        w = Window.partitionBy(cid).orderBy(
+            return (F.col("cluster_id") == F.col(self.id_col)).cast("int")
+        w = Window.partitionBy("cluster_id").orderBy(
             F.desc("q6"), F.asc(self.id_col)
         )
         return (F.row_number().over(w) == 1).cast("int")
 
     def keep_list(self) -> DataFrame:
-        """(doc_id, cluster_id, [q6,] keep) — column-identical to
-        `doc_keep_list` (min_id policy) / `doc_keep_best` (best_quality
-        policy), reading the staged cluster frame."""
-        from beacon_indexer_spark.operators.text import quality_score
-
-        spine = self._spine()
-        if self.keep_policy == "best_quality":
-            spine = self.docs.select(
-                F.col(self.id_col).cast("long").alias(self.id_col),
-                F.round(quality_score(self.text_col), 6).alias("q6"),
-            )
-        joined = spine.join(self.clusters, self.id_col, "left")
-        cid = F.coalesce(F.col("cluster_id"), F.col(self.id_col))
-        cols = [self.id_col, cid.cast("long").alias("cluster_id")]
-        if self.keep_policy == "best_quality":
-            cols.append(F.col("q6"))
-        return joined.select(*cols, self._keep_col(cid).alias("keep"))
-
-    def manifest(self) -> DataFrame:
-        """(doc_id, cluster_id, keep, q6, q_pass, split, include) —
-        column-identical to `doc_curation_manifest`; under
-        ``best_quality`` the keep flag follows `doc_keep_best`."""
-        from beacon_indexer_spark.operators.sampling import split_assign
-        from beacon_indexer_spark.operators.text import quality_score
-
-        spine = self.docs.select(
-            F.col(self.id_col).cast("long").alias(self.id_col),
-            F.round(quality_score(self.text_col), 6).alias("q6"),
-            split_assign(F.col(self.id_col), self.split_fracs).alias("split"),
+        """(doc_id, cluster_id, [q6,] keep) — `doc_keep_list` (min_id
+        policy) / `doc_keep_best` (best_quality policy)."""
+        policy = self._policy_cols()
+        return self._resolved(*policy).select(
+            self.id_col,
+            "cluster_id",
+            *(["q6"] if policy else []),
+            self._keep().alias("keep"),
         )
-        joined = spine.join(self.clusters, self.id_col, "left")
-        cid = F.coalesce(F.col("cluster_id"), F.col(self.id_col))
-        keep = self._keep_col(cid)
+
+    _MANIFEST_COLS = ("cluster_id", "keep", "q6", "q_pass", "split", "include")
+
+    def _manifest(self, *cols) -> DataFrame:
+        """`_resolved` spine with q6, split and ``cols`` plus the keep,
+        q_pass and include verdicts — the base of `manifest` and
+        `decision`."""
+        from beacon_indexer_spark.operators.sampling import split_assign
+
+        joined = self._resolved(
+            self._q6(),
+            split_assign(F.col(self.id_col), self.split_fracs).alias("split"),
+            *cols,
+        )
+        keep = self._keep()
         q_pass = (F.col("q6") >= self.quality_threshold).cast("int")
         return joined.select(
-            self.id_col,
-            cid.cast("long").alias("cluster_id"),
+            "*",
             keep.alias("keep"),
-            "q6",
             q_pass.alias("q_pass"),
-            "split",
             (keep.cast("boolean") & q_pass.cast("boolean"))
             .cast("int")
             .alias("include"),
         )
 
+    def manifest(self) -> DataFrame:
+        """(doc_id, cluster_id, keep, q6, q_pass, split, include) —
+        `doc_curation_manifest`; under ``best_quality`` the keep flag
+        follows `doc_keep_best`."""
+        return self._manifest().select(self.id_col, *self._MANIFEST_COLS)
+
     def summary(self) -> DataFrame:
-        """One-row rollup — column-identical to `corpus_dedup_summary`."""
+        """One-row rollup — `corpus_dedup_summary`."""
         tot = self.docs.agg(F.count(F.lit(1)).alias("n_docs"))
         stats = (
             self.clusters.groupBy("cluster_id")
@@ -378,12 +437,9 @@ class CurationRun:
         )
 
     def cluster_size_dist(self) -> DataFrame:
-        """(cluster_size, n_clusters, n_docs) — column-identical to
-        `dedup_cluster_size_dist`, reading the staged cluster frame
-        (singletons included via the coalesce-to-own-id spine)."""
-        joined = self._spine().join(self.clusters, self.id_col, "left")
-        cid = F.coalesce(F.col("cluster_id"), F.col(self.id_col))
-        sizes = joined.select(cid.alias("__cid")).groupBy("__cid").agg(
+        """(cluster_size, n_clusters, n_docs) — `dedup_cluster_size_dist`
+        (singletons included via the resolved spine)."""
+        sizes = self._resolved().groupBy("cluster_id").agg(
             F.count(F.lit(1)).alias("__sz")
         )
         return (
@@ -399,37 +455,23 @@ class CurationRun:
             )
         )
 
-    def _keep_frame(self, source_col: str = "source") -> DataFrame:
-        """Docs spine + resolved cluster id + configured keep verdict —
-        the shared base for the budget/length rollups. Carries q6 when
-        the policy needs it."""
-        from beacon_indexer_spark.operators.text import (
-            quality_score,
-            token_count,
-        )
+    def _keep_frame(self, *cols) -> DataFrame:
+        """Resolved spine + ``__nt`` token count + ``__keep`` verdict (and
+        ``cols``) — the shared base of the budget/length rollups."""
+        from beacon_indexer_spark.operators.text import token_count
 
-        cols = [F.col(self.id_col).cast("long").alias(self.id_col)]
-        if self.keep_policy == "best_quality":
-            cols.append(F.round(quality_score(self.text_col), 6).alias("q6"))
-        spine = self.docs.select(
-            *cols,
-            F.col(source_col).alias("source"),
+        joined = self._resolved(
+            *self._policy_cols(),
             token_count(self.text_col).cast("long").alias("__nt"),
+            *cols,
         )
-        joined = spine.join(self.clusters, self.id_col, "left")
-        cid = F.coalesce(F.col("cluster_id"), F.col(self.id_col))
-        return joined.select(
-            self.id_col,
-            "source",
-            "__nt",
-            self._keep_col(cid).alias("__keep"),
-        )
+        return joined.withColumn("__keep", self._keep())
 
     def token_budget(self, source_col: str = "source") -> DataFrame:
         """(source, n_docs, n_kept, tokens_total, tokens_kept, kept_frac)
-        — column-identical to `source_token_budget` under the min_id
-        policy; under best_quality the kept copy is the highest-q6 one."""
-        kf = self._keep_frame(source_col)
+        — `source_token_budget` under the min_id policy; under
+        best_quality the kept copy is the highest-q6 one."""
+        kf = self._keep_frame(F.col(source_col).alias("source"))
         return (
             kf.groupBy("source")
             .agg(
@@ -451,11 +493,9 @@ class CurationRun:
         )
 
     def dup_rate_by_length(self) -> DataFrame:
-        """(len_band, n_docs, n_dups, dup_rate) — column-identical to
-        `corpus_dup_rate_by_length` (fixed token-length CASE bands)."""
-        # no source column needed: the id stands in for the unused
-        # "source" slot of the shared keep frame
-        kf = self._keep_frame(source_col=self.id_col)
+        """(len_band, n_docs, n_dups, dup_rate) — `corpus_dup_rate_by_length`
+        (fixed token-length CASE bands)."""
+        kf = self._keep_frame()
         band = (
             F.when(F.col("__nt") <= 32, "a_le32")
             .when(F.col("__nt") <= 64, "b_le64")
@@ -480,10 +520,9 @@ class CurationRun:
     def leakage_split(
         self, train_rate: float = 0.9, salt: int = 7
     ) -> DataFrame:
-        """(doc_id, cluster_id, split, naive_split, moved) — column-
-        identical to `split_leakage_guard`: split verdicts hash the
-        staged CLUSTER id so near-copies never straddle the eval
-        boundary."""
+        """(doc_id, cluster_id, split, naive_split, moved) —
+        `split_leakage_guard`: split verdicts hash the staged CLUSTER id
+        so near-copies never straddle the eval boundary."""
         from beacon_indexer_spark.operators.sampling import leakage_safe_split
 
         return leakage_safe_split(
@@ -496,10 +535,9 @@ class CurationRun:
     def _contamination(self) -> DataFrame:
         """Staged contamination-span frame: `cross_corpus_contamination_
         spans` of the training docs against ``test_docs``, computed ONCE
-        per run (localCheckpoint-backed, lazily on first access so runs
-        without a decon stage pay nothing). Every decon-derived frame
-        reads these blocks — one gram join per run, same staging
-        discipline as the LSH→CC cluster frame."""
+        per run (localCheckpoint-backed). Every decon-derived frame reads
+        these blocks — one gram join per run, same staging discipline as
+        the LSH→CC cluster frame."""
         if self.test_docs is None:
             raise ValueError(
                 "CurationRun built without test_docs; pass the held-out "
@@ -517,7 +555,7 @@ class CurationRun:
         return self._contam
 
     def contamination_spans(self) -> DataFrame:
-        """(doc_id, span_start, span_end, n_tokens) — column-identical to
+        """(doc_id, span_start, span_end, n_tokens) —
         `corpus_decontamination_spans`, reading the staged span frame."""
         return self._contamination().select(
             "doc_id", "span_start", "span_end", "n_tokens"
@@ -525,33 +563,10 @@ class CurationRun:
 
     def contamination_verdict(self) -> DataFrame:
         """(doc_id, doc_tokens, contam_tokens, contam_rate, verdict) —
-        column-identical to `doc_contamination_verdict`: per-doc
-        contaminated-token coverage with the keep/trim/drop policy
-        (drop above ``drop_threshold``, trim at ``trim_threshold``+)."""
-        covered = self._contamination().groupBy("doc_id").agg(
-            F.sum("n_tokens").cast("long").alias("contam_tokens")
-        )
-        toks = F.filter(
-            F.split(F.lower(F.col(self.text_col)), r"\s+"), lambda t: t != ""
-        )
-        base = self.docs.select(
-            F.col(self.id_col).cast("long").alias("doc_id"),
-            F.size(toks).cast("long").alias("doc_tokens"),
-        )
-        rate = F.coalesce("contam_tokens", F.lit(0)) / F.greatest(
-            "doc_tokens", F.lit(1)
-        )
-        return base.join(covered, "doc_id", "left").select(
-            "doc_id",
-            "doc_tokens",
-            F.coalesce("contam_tokens", F.lit(0))
-            .cast("long")
-            .alias("contam_tokens"),
-            F.round(rate, 6).alias("contam_rate"),
-            F.when(rate > self.drop_threshold, "drop")
-            .when(rate >= self.trim_threshold, "trim")
-            .otherwise("keep")
-            .alias("verdict"),
+        `doc_contamination_verdict` over the staged span frame."""
+        return contamination_verdict(
+            self.docs, self._contamination(), self.id_col, self.text_col,
+            self.drop_threshold, self.trim_threshold,
         )
 
     def decision(self) -> DataFrame:
@@ -564,62 +579,29 @@ class CurationRun:
         way out). Both staged frames (clusters, contamination spans) are
         read from checkpoint blocks — no LSH/CC or gram join re-runs.
 
-        r13 (§2.4, §3.1): the verdict derivation is COLLAPSED into the
-        manifest spine — one corpus scan computes q6, split AND the
-        token count the contamination rate divides by, then the tiny
-        per-doc coverage aggregate (contaminated docs only, read from
-        the staged span checkpoint) left-joins in. The old shape built
-        `manifest()` and `contamination_verdict()` as two independent
-        full-corpus frames — a second corpus scan+tokenize and a
-        full-width sort-merge join of two corpus-sized sides — to
-        produce byte-identical columns."""
-        from beacon_indexer_spark.operators.sampling import split_assign
-        from beacon_indexer_spark.operators.text import quality_score
+        One corpus scan computes q6, split AND the token count the
+        contamination rate divides by; the tiny per-doc coverage
+        aggregate (contaminated docs only, read from the staged span
+        checkpoint) then left-joins in — never a second corpus-sized
+        frame and a full-width join of the two."""
+        from beacon_indexer_spark.operators.text import token_count
 
-        toks = F.filter(
-            F.split(F.lower(F.col(self.text_col)), r"\s+"), lambda t: t != ""
+        base = self._manifest(
+            token_count(self.text_col).cast("long").alias("__doc_tokens")
         )
-        spine = self.docs.select(
-            F.col(self.id_col).cast("long").alias(self.id_col),
-            F.round(quality_score(self.text_col), 6).alias("q6"),
-            split_assign(F.col(self.id_col), self.split_fracs).alias("split"),
-            F.size(toks).cast("long").alias("__doc_tokens"),
+        covered = covered_tokens(self._contamination()).withColumnRenamed(
+            "doc_id", self.id_col
         )
-        joined = spine.join(self.clusters, self.id_col, "left")
-        covered = self._contamination().groupBy("doc_id").agg(
-            F.sum("n_tokens").cast("long").alias("contam_tokens")
+        tokens, rate, verdict = contamination_columns(
+            "__doc_tokens", self.drop_threshold, self.trim_threshold
         )
-        joined = joined.join(
-            covered.withColumnRenamed("doc_id", self.id_col),
+        return base.join(covered, self.id_col, "left").select(
             self.id_col,
-            "left",
-        )
-        cid = F.coalesce(F.col("cluster_id"), F.col(self.id_col))
-        keep = self._keep_col(cid)
-        q_pass = (F.col("q6") >= self.quality_threshold).cast("int")
-        include = (keep.cast("boolean") & q_pass.cast("boolean")).cast("int")
-        rate = F.coalesce("contam_tokens", F.lit(0)) / F.greatest(
-            "__doc_tokens", F.lit(1)
-        )
-        verdict = (
-            F.when(rate > self.drop_threshold, "drop")
-            .when(rate >= self.trim_threshold, "trim")
-            .otherwise("keep")
-        )
-        return joined.select(
-            self.id_col,
-            cid.cast("long").alias("cluster_id"),
-            keep.alias("keep"),
-            "q6",
-            q_pass.alias("q_pass"),
-            "split",
-            include.alias("include"),
-            F.coalesce("contam_tokens", F.lit(0))
-            .cast("long")
-            .alias("contam_tokens"),
+            *self._MANIFEST_COLS,
+            tokens.alias("contam_tokens"),
             F.round(rate, 6).alias("contam_rate"),
             verdict.alias("contam_verdict"),
-            (include.cast("boolean") & (verdict != "drop"))
+            (F.col("include").cast("boolean") & (verdict != "drop"))
             .cast("int")
             .alias("admit"),
         )

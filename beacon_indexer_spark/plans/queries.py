@@ -36,6 +36,7 @@ from beacon_indexer_spark.operators import sampling as SP
 from beacon_indexer_spark.operators import similarity as S
 from beacon_indexer_spark.operators import sketch as KV
 from beacon_indexer_spark.operators import text as X
+from beacon_indexer_spark.session import parallel_build
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -202,23 +203,6 @@ def _hist_prefix(hist: DataFrame, key: str, val, out):
     shifted = hist.withColumn(key, F.col(key) - F.lit(mn))
     res = _exclusive_prefix(shifted, key, val, out, max_key=mx - mn)
     return hist, res.withColumn(key, F.col(key) + F.lit(mn))
-
-
-def _parallel_build(*fns):
-    """Construct several INDEPENDENT query fragments from driver threads
-    (the overlap-independent-jobs idiom): each fragment's eager
-    construction-time jobs (bucket-cap probes, checkpoint
-    materializations, CC rounds) interleave on the scheduler instead of
-    running serially. Results return in argument order; each fragment is
-    still built exactly once. Use ONLY for fragments with no data
-    dependency on each other."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
-    with ThreadPoolExecutor(max_workers=len(fns)) as pool:
-        futs = [pool.submit(inheritable_thread_target(fn)) for fn in fns]
-        return [f.result() for f in futs]
 
 
 def _dd_minhash_base(x: str) -> str:
@@ -786,6 +770,23 @@ WHERE CAST(n_common AS DOUBLE) / (sa.n + sb.n - n_common) >= 0.1
 
 _MINHASH_K = 8
 _MINHASH_BANDS = 4
+
+
+def _curation_run(
+    spark: SparkSession, sf_dir: str, docs: DataFrame | None = None, **kw
+):
+    """`CurationRun` over the documents table (or ``docs``) with the
+    curation family's fixed LSH/split parameters — the one implementation
+    behind the dedup/curation queries, each of which returns one of the
+    run's frames."""
+    from beacon_indexer_spark.plans.pipeline import CurationRun
+
+    if docs is None:
+        docs = _ts(spark, sf_dir, "documents")
+    return CurationRun(
+        docs, k=_MINHASH_K, bands=_MINHASH_BANDS, shingle_n=3,
+        split_fracs=_SPLIT_FRACS, **kw,
+    )
 
 
 def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1674,13 +1675,8 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate clusters: LSH candidate pairs → connected components
     (min-label propagation, O(diameter) rounds). The oracle computes the
     identical transitive closure with a recursive CTE."""
-    docs = _ts(spark, sf_dir, "documents")
-    pairs = D.minhash_lsh_candidates(
-        docs, "doc_id", "text", k=_MINHASH_K, bands=_MINHASH_BANDS, shingle_n=3
-    )
-    out = D.connected_components(pairs)
-    return out.select(
-        F.col("node").cast("long").alias("doc_id"),
+    return _curation_run(spark, sf_dir).clusters.select(
+        F.col("doc_id").cast("long").alias("doc_id"),
         F.col("cluster_id").cast("long").alias("cluster_id"),
     )
 
@@ -2468,19 +2464,7 @@ def q_doc_keep_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     document. The cluster frame is broadcast only when its PROBED row
     count allows (high-dup raw-crawl corpora fall back to a shuffle
     join — see `broadcast_if_small`)."""
-    docs = _ts(spark, sf_dir, "documents")
-    pairs = D.minhash_lsh_candidates(
-        docs, "doc_id", "text", k=_MINHASH_K, bands=_MINHASH_BANDS, shingle_n=3
-    )
-    clusters = D.connected_components(pairs, node_col="doc_id")
-    spine = docs.select(F.col("doc_id").cast("long").alias("doc_id"))
-    joined = spine.join(D.broadcast_if_small(clusters, expect_rows_known=True), "doc_id", "left")
-    cid = F.coalesce(F.col("cluster_id"), F.col("doc_id"))
-    return joined.select(
-        "doc_id",
-        cid.cast("long").alias("cluster_id"),
-        (cid == F.col("doc_id")).cast("int").alias("keep"),
-    )
+    return _curation_run(spark, sf_dir).keep_list()
 
 
 _CLUSTERS_FINAL_SELECT = "SELECT CAST(s AS BIGINT) AS doc_id,"
@@ -5411,37 +5395,14 @@ def q_doc_curation_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     training run consumes: per document, the dedup verdict (LSH →
     connected components → min-id keep), the quality gate (score ≥ 0.5),
     the train/val/test split, and the final include flag
-    (keep ∧ quality). Composes `minhash_lsh_candidates`,
-    `connected_components`, `quality_score`, and `split_assign` into a
-    single plan: the dup-cluster frame holds only docs WITH duplicates
+    (keep ∧ quality) — `CurationRun.manifest()`. The staged
+    dup-cluster frame holds only docs WITH duplicates
     and is broadcast only when its probed row count stays under the
     ceiling (raw crawls with 30-80% dup rates fall back to a shuffle
     join — `broadcast_if_small`); quality and split are narrow
     expressions on the spine — one corpus scan feeds everything but the
     LSH shuffle."""
-    docs = _ts(spark, sf_dir, "documents")
-    pairs = D.minhash_lsh_candidates(
-        docs, "doc_id", "text", k=_MINHASH_K, bands=_MINHASH_BANDS, shingle_n=3
-    )
-    clusters = D.connected_components(pairs, node_col="doc_id")
-    spine = docs.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.round(X.quality_score("text"), 6).alias("q6"),
-        SP.split_assign(F.col("doc_id"), _SPLIT_FRACS).alias("split"),
-    )
-    joined = spine.join(D.broadcast_if_small(clusters, expect_rows_known=True), "doc_id", "left")
-    cid = F.coalesce(F.col("cluster_id"), F.col("doc_id"))
-    keep = (cid == F.col("doc_id")).cast("int")
-    q_pass = (F.col("q6") >= 0.5).cast("int")
-    return joined.select(
-        "doc_id",
-        cid.cast("long").alias("cluster_id"),
-        keep.alias("keep"),
-        "q6",
-        q_pass.alias("q_pass"),
-        "split",
-        (keep.cast("boolean") & q_pass.cast("boolean")).cast("int").alias("include"),
-    )
+    return _curation_run(spark, sf_dir).manifest()
 
 
 def _oracle_doc_curation_manifest_sql() -> str:
@@ -5485,24 +5446,20 @@ FROM q LEFT JOIN cl ON cl.doc_id = q.doc_id
 
 
 def q_doc_curation_decision(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The FULL curation decision from ONE staged run — this query
-    executes `plans/pipeline.py CurationRun.decision()` itself, so the
-    staged pipeline (not just its standalone query twins) is
-    oracle-gated end-to-end: src0 plays the held-out benchmark, the rest
+    """The FULL curation decision from ONE staged run
+    (`plans/pipeline.py CurationRun.decision()`), oracle-gated
+    end-to-end: src0 plays the held-out benchmark, the rest
     of the corpus is the training candidate set, and every train doc
     gets dedup keep + quality gate + split + decon keep/trim/drop + the
     final ``admit`` flag. Clusters and contamination spans are staged
     once (localCheckpoint) and every derived column reads the staged
     blocks; the oracle re-derives the identical decision from raw SQL
     (train-restricted LSH→CC recursive closure + gram-join decon)."""
-    from beacon_indexer_spark.plans.pipeline import CurationRun
-
     docs = _ts(spark, sf_dir, "documents")
     train = docs.filter(F.col("source") != "src0")
     test = docs.filter(F.col("source") == "src0")
-    run = CurationRun(
-        train, k=_MINHASH_K, bands=_MINHASH_BANDS, shingle_n=3,
-        split_fracs=_SPLIT_FRACS, test_docs=test, decon_k=8,
+    run = _curation_run(
+        spark, sf_dir, docs=train, test_docs=test, decon_k=8
     )
     return run.decision()
 
@@ -5725,33 +5682,7 @@ def q_corpus_dedup_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     rate — the one-row report a curation run logs. Every input is an
     already-bounded frame (CC output = only docs WITH duplicates), so
     the final assembly is cross-joins of one-row aggregates."""
-    docs = _ts(spark, sf_dir, "documents")
-    pairs = D.minhash_lsh_candidates(
-        docs, "doc_id", "text", k=_MINHASH_K, bands=_MINHASH_BANDS, shingle_n=3
-    )
-    clusters = D.connected_components(pairs)
-    tot = docs.agg(F.count(F.lit(1)).alias("n_docs"))
-    # one pass over the CC output: per-cluster sizes, then SUM/COUNT/MAX
-    # in a single global aggregate (sum of sizes == member count)
-    stats = (
-        clusters.groupBy("cluster_id")
-        .agg(F.count(F.lit(1)).alias("__sz"))
-        .agg(
-            F.coalesce(F.sum("__sz"), F.lit(0)).alias("n_dup_docs"),
-            F.count(F.lit(1)).alias("n_clusters"),
-            F.coalesce(F.max("__sz"), F.lit(0)).alias("max_cluster_size"),
-        )
-    )
-    j = tot.crossJoin(F.broadcast(stats))
-    removed = F.col("n_dup_docs") - F.col("n_clusters")
-    return j.select(
-        F.col("n_docs").cast("long").alias("n_docs"),
-        F.col("n_dup_docs").cast("long").alias("n_dup_docs"),
-        F.col("n_clusters").cast("long").alias("n_clusters"),
-        F.col("max_cluster_size").cast("long").alias("max_cluster_size"),
-        (F.col("n_docs") - removed).cast("long").alias("n_kept"),
-        F.round(removed.cast("double") / F.col("n_docs"), 6).alias("dup_rate"),
-    )
+    return _curation_run(spark, sf_dir).summary()
 
 
 def _oracle_corpus_dedup_summary_sql() -> str:
@@ -6546,29 +6477,7 @@ def q_doc_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     LSH→CC spine as `doc_keep_list`; the winner is a per-cluster
     partitioned window (never global), and singletons keep themselves by
     construction."""
-    docs = _ts(spark, sf_dir, "documents")
-    pairs = D.minhash_lsh_candidates(
-        docs, "doc_id", "text", k=_MINHASH_K, bands=_MINHASH_BANDS, shingle_n=3
-    )
-    clusters = D.connected_components(pairs, node_col="doc_id")
-    spine = docs.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.round(X.quality_score("text"), 6).alias("q6"),
-    )
-    joined = spine.join(D.broadcast_if_small(clusters, expect_rows_known=True), "doc_id", "left")
-    cid = F.coalesce(F.col("cluster_id"), F.col("doc_id"))
-    staged = joined.select(
-        "doc_id", cid.cast("long").alias("cluster_id"), "q6"
-    )
-    w = Window.partitionBy("cluster_id").orderBy(
-        F.desc("q6"), F.asc("doc_id")
-    )
-    return staged.select(
-        "doc_id",
-        "cluster_id",
-        "q6",
-        (F.row_number().over(w) == 1).cast("int").alias("keep"),
-    )
+    return _curation_run(spark, sf_dir, keep_policy="best_quality").keep_list()
 
 
 def _oracle_doc_keep_best_sql() -> str:
@@ -7098,37 +7007,7 @@ def q_source_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     the number that actually feeds a training-mix planner (raw token
     counts overstate sources that are mostly self-copies). One keyed
     left join (probe-guarded broadcast) + one |sources|-bounded agg."""
-    docs = _ts(spark, sf_dir, "documents")
-    pairs = D.minhash_lsh_candidates(
-        docs, "doc_id", "text", k=_MINHASH_K, bands=_MINHASH_BANDS, shingle_n=3
-    )
-    clusters = D.connected_components(pairs, node_col="doc_id")
-    base = docs.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        "source",
-        X.token_count("text").cast("long").alias("__nt"),
-    )
-    joined = base.join(D.broadcast_if_small(clusters, expect_rows_known=True), "doc_id", "left")
-    keep = F.coalesce(F.col("cluster_id"), F.col("doc_id")) == F.col("doc_id")
-    return (
-        joined.groupBy("source")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.sum(keep.cast("long")).cast("long").alias("n_kept"),
-            F.sum("__nt").cast("long").alias("tokens_total"),
-            F.sum(F.when(keep, F.col("__nt")).otherwise(F.lit(0)))
-            .cast("long")
-            .alias("tokens_kept"),
-        )
-        .withColumn(
-            "kept_frac",
-            F.round(
-                F.col("tokens_kept").cast("double")
-                / F.col("tokens_total").cast("double"),
-                6,
-            ),
-        )
-    )
+    return _curation_run(spark, sf_dir).token_budget()
 
 
 def _oracle_source_token_budget_sql() -> str:
@@ -7162,17 +7041,8 @@ def q_split_leakage_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
     leakage_safe_split): split verdicts hash the CLUSTER id, so near-
     copies never straddle the eval boundary; `moved` flags docs a naive
     per-doc hash split would have leaked to the other side."""
-    docs = _ts(spark, sf_dir, "documents")
-    pairs = D.minhash_lsh_candidates(
-        docs, "doc_id", "text", k=_MINHASH_K, bands=_MINHASH_BANDS, shingle_n=3
-    )
-    clusters = D.connected_components(pairs, node_col="doc_id")
-    return SP.leakage_safe_split(
-        docs,
-        D.broadcast_if_small(clusters, expect_rows_known=True),
-        "doc_id",
-        train_rate=_SPLIT_TRAIN_RATE,
-        salt=_SPLIT_SALT,
+    return _curation_run(spark, sf_dir).leakage_split(
+        train_rate=_SPLIT_TRAIN_RATE, salt=_SPLIT_SALT
     )
 
 
@@ -7430,28 +7300,7 @@ def q_dedup_cluster_size_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     every dedup run ships with): LSH → CC → cluster sizes (singletons
     included via the coalesce-to-own-id spine) → docs/clusters per size.
     Aggregations keyed by cluster then by size — output-bounded."""
-    docs = _ts(spark, sf_dir, "documents")
-    pairs = D.minhash_lsh_candidates(
-        docs, "doc_id", "text", k=_MINHASH_K, bands=_MINHASH_BANDS, shingle_n=3
-    )
-    clusters = D.connected_components(pairs, node_col="doc_id")
-    spine = docs.select(F.col("doc_id").cast("long").alias("doc_id"))
-    cid = F.coalesce(F.col("cluster_id"), F.col("doc_id"))
-    sizes = (
-        spine.join(D.broadcast_if_small(clusters, expect_rows_known=True), "doc_id", "left")
-        .select(cid.alias("__cid"))
-        .groupBy("__cid")
-        .agg(F.count(F.lit(1)).alias("__sz"))
-    )
-    return (
-        sizes.groupBy("__sz")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_clusters"),
-            F.sum("__sz").cast("long").alias("n_docs"),
-        )
-        .select(F.col("__sz").cast("long").alias("cluster_size"),
-                "n_clusters", "n_docs")
-    )
+    return _curation_run(spark, sf_dir).cluster_size_dist()
 
 
 def _oracle_dedup_cluster_size_dist_sql() -> str:
@@ -7510,37 +7359,7 @@ def q_corpus_dup_rate_by_length(spark: SparkSession, sf_dir: str) -> DataFrame:
     content? Drives whether dedup effort targets short-doc blocking or
     long-doc fingerprints. Fixed CASE bands (no quantile dependence);
     the keep verdict rides the LSH → CC spine."""
-    docs = _ts(spark, sf_dir, "documents")
-    pairs = D.minhash_lsh_candidates(
-        docs, "doc_id", "text", k=_MINHASH_K, bands=_MINHASH_BANDS, shingle_n=3
-    )
-    clusters = D.connected_components(pairs, node_col="doc_id")
-    base = docs.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        X.token_count("text").cast("long").alias("__nt"),
-    )
-    joined = base.join(D.broadcast_if_small(clusters, expect_rows_known=True), "doc_id", "left")
-    keep = F.coalesce(F.col("cluster_id"), F.col("doc_id")) == F.col("doc_id")
-    band = (
-        F.when(F.col("__nt") <= 32, "a_le32")
-        .when(F.col("__nt") <= 64, "b_le64")
-        .when(F.col("__nt") <= 128, "c_le128")
-        .when(F.col("__nt") <= 256, "d_le256")
-        .otherwise("e_gt256")
-    )
-    return (
-        joined.select(band.alias("len_band"), keep.cast("long").alias("__k"))
-        .groupBy("len_band")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.sum(F.lit(1) - F.col("__k")).cast("long").alias("n_dups"),
-            F.round(
-                F.sum(F.lit(1) - F.col("__k")).cast("double")
-                / F.count(F.lit(1)).cast("double"),
-                6,
-            ).alias("dup_rate"),
-        )
-    )
+    return _curation_run(spark, sf_dir).dup_rate_by_length()
 
 
 def _oracle_corpus_dup_rate_by_length_sql() -> str:
@@ -7922,17 +7741,13 @@ def q_doc_quality_vs_dup_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup pass deleting' (top-right cell) is the tradeoff number a
     curation review asks for first. Rides the LSH → CC spine; one
     4-group aggregate."""
-    docs = _ts(spark, sf_dir, "documents")
-    pairs = D.minhash_lsh_candidates(
-        docs, "doc_id", "text", k=_MINHASH_K, bands=_MINHASH_BANDS, shingle_n=3
-    )
-    clusters = D.connected_components(pairs, node_col="doc_id")
-    base = docs.select(
+    run = _curation_run(spark, sf_dir)
+    base = run.docs.select(
         F.col("doc_id").cast("long").alias("doc_id"),
         F.round(X.quality_score("text"), 6).alias("__q6"),
         X.token_count("text").cast("long").alias("__nt"),
     )
-    joined = base.join(D.broadcast_if_small(clusters, expect_rows_known=True), "doc_id", "left")
+    joined = base.join(run.clusters, "doc_id", "left")
     keep = (
         F.coalesce(F.col("cluster_id"), F.col("doc_id")) == F.col("doc_id")
     ).cast("int")
@@ -9171,15 +8986,11 @@ def q_doc_keep_policy_bias(spark: SparkSession, sf_dir: str) -> DataFrame:
     copies, plus the fraction of clusters where some dropped copy is
     longer — the number that justifies switching to the best_quality
     policy. Cluster-keyed aggregate + one-row rollup."""
-    docs = _ts(spark, sf_dir, "documents")
-    pairs = D.minhash_lsh_candidates(
-        docs, "doc_id", "text", k=_MINHASH_K, bands=_MINHASH_BANDS, shingle_n=3
-    )
-    clusters = D.connected_components(pairs, node_col="doc_id")
-    base = docs.select(
+    run = _curation_run(spark, sf_dir)
+    base = run.docs.select(
         F.col("doc_id").cast("long").alias("doc_id"),
         X.token_count("text").cast("long").alias("__nt"),
-    ).join(clusters, "doc_id")
+    ).join(run.clusters, "doc_id")
     per_cluster = base.groupBy("cluster_id").agg(
         F.count(F.lit(1)).alias("__m"),
         F.sum("__nt").alias("__sum"),
@@ -10461,7 +10272,8 @@ def q_dedup_detector_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     # driver threads so their construction-time probe/checkpoint jobs
     # interleave instead of running serially (r12, §2.6 idiom; A/B
     # measured 2.5 s vs 3.1 s serial)
-    mh, hp = _parallel_build(
+    mh, hp = parallel_build(
+        spark,
         lambda: D.minhash_lsh_candidates(
             docs, "doc_id", "text", k=_MINHASH_K, bands=_MINHASH_BANDS,
             shingle_n=3,
@@ -20710,37 +20522,15 @@ def q_doc_contamination_verdict(
     rest), 'drop' (> 50%: mostly benchmark text). The span aggregation
     is a per-doc sum of disjoint maximal runs (exact); docs with no
     contamination report rate 0 through the left join."""
+    from beacon_indexer_spark.plans.pipeline import contamination_verdict
+
     docs = _ts(spark, sf_dir, "documents")
     test = docs.filter(F.col("source") == "src0")
     train = docs.filter(F.col("source") != "src0")
     spans = D.cross_corpus_contamination_spans(
         train, test, "doc_id", "text", k=8
     )
-    covered = spans.groupBy("doc_id").agg(
-        F.sum("n_tokens").cast("long").alias("contam_tokens")
-    )
-    toks = F.filter(
-        F.split(F.lower(F.col("text")), r"\s+"), lambda t: t != ""
-    )
-    base = train.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.size(toks).cast("long").alias("doc_tokens"),
-    )
-    rate = F.coalesce("contam_tokens", F.lit(0)) / F.greatest(
-        "doc_tokens", F.lit(1)
-    )
-    return base.join(covered, "doc_id", "left").select(
-        "doc_id",
-        "doc_tokens",
-        F.coalesce("contam_tokens", F.lit(0))
-        .cast("long")
-        .alias("contam_tokens"),
-        F.round(rate, 6).alias("contam_rate"),
-        F.when(rate > 0.5, "drop")
-        .when(rate >= 0.05, "trim")
-        .otherwise("keep")
-        .alias("verdict"),
-    )
+    return contamination_verdict(train, spans)
 
 
 ORACLE_DOC_CONTAMINATION_VERDICT = (
@@ -21132,7 +20922,8 @@ def q_similarity_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sample is reduced against the fitted centroids only on the driver,
     # after both exist) — build them from two driver threads so the two
     # serial collect chains interleave (r12, overlap-independent-jobs)
-    cents, samp = _parallel_build(
+    cents, samp = parallel_build(
+        spark,
         lambda: kmeans_centroids(emb, "vec_id", "embedding", k=8, iters=2),
         lambda: S.ivf_centroids(emb, "vec_id", "embedding", k=16),
     )
@@ -21583,7 +21374,8 @@ def q_similarity_ivfpq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _ts(spark, sf_dir, "embeddings").localCheckpoint(eager=False)
     # ^ same shared-scan barrier as q_similarity_ivfpq_residual, and the
     # same concurrent fit+sample staging (r12, overlap-independent-jobs)
-    cents, samp = _parallel_build(
+    cents, samp = parallel_build(
+        spark,
         lambda: kmeans_centroids(emb, "vec_id", "embedding", k=8, iters=2),
         lambda: S.ivf_centroids(emb, "vec_id", "embedding", k=16),
     )

@@ -77,3 +77,23 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def parallel_build(spark: SparkSession, *fns):
+    """Construct several INDEPENDENT query fragments from driver threads
+    (the overlap-independent-jobs idiom): each fragment's eager
+    construction-time jobs (bucket-cap probes, checkpoint
+    materializations, CC rounds) interleave on the scheduler instead of
+    running serially. Results return in argument order; each fragment is
+    still built exactly once. Use ONLY for fragments with no data
+    dependency on each other. Each thread inherits the caller's local
+    properties and the session's tags."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    with ThreadPoolExecutor(max_workers=len(fns)) as pool:
+        futs = [
+            pool.submit(inheritable_thread_target(spark)(fn)) for fn in fns
+        ]
+        return [f.result() for f in futs]

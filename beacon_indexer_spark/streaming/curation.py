@@ -82,7 +82,11 @@ def admit_decision(
         token_kgram_positions,
     )
     from beacon_indexer_spark.operators.sampling import split_assign
-    from beacon_indexer_spark.operators.text import quality_score
+    from beacon_indexer_spark.operators.text import quality_score, token_count
+    from beacon_indexer_spark.plans.pipeline import (
+        contamination_columns,
+        covered_tokens,
+    )
 
     idc = id_col
     split_fracs = split_fracs or [("train", 0.8), ("val", 0.1), ("test", 0.1)]
@@ -119,36 +123,26 @@ def admit_decision(
     if eval_grams is not None:
         grams = token_kgram_positions(batch_df, idc, text_col, decon_k)
         marked = grams.join(eval_grams, "gram").select("doc_id", "pos")
-        covered = (
+        covered = covered_tokens(
             _merge_marked_spans(marked, decon_k)
-            .groupBy("doc_id")
-            .agg(F.sum("n_tokens").cast("long").alias("contam_tokens"))
-            .withColumnRenamed("doc_id", idc)
-        )
+        ).withColumnRenamed("doc_id", idc)
     else:
         covered = batch_df.select(
             F.col(idc).cast("long").alias(idc)
         ).limit(0).withColumn("contam_tokens", F.lit(0).cast("long"))
     # ---- narrow per-row stages + assembly
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), r"\s+"), lambda t: t != ""
-    )
     spine = batch_df.select(
         F.col(idc).cast("long").alias(idc),
         F.round(quality_score(text_col), 6).alias("q6"),
         split_assign(F.col(idc), split_fracs).alias("split"),
-        F.size(toks).cast("long").alias("__doc_tokens"),
+        token_count(text_col).cast("long").alias("__doc_tokens"),
     )
     joined = spine.join(dups, idc, "left").join(covered, idc, "left")
     keep = F.col("dup_of").isNull().cast("int")
     q_pass = (F.col("q6") >= quality_threshold).cast("int")
     include = (keep.cast("boolean") & q_pass.cast("boolean")).cast("int")
-    contam_tokens = F.coalesce("contam_tokens", F.lit(0)).cast("long")
-    rate = contam_tokens / F.greatest("__doc_tokens", F.lit(1))
-    verdict = (
-        F.when(rate > drop_threshold, "drop")
-        .when(rate >= trim_threshold, "trim")
-        .otherwise("keep")
+    contam_tokens, rate, verdict = contamination_columns(
+        "__doc_tokens", drop_threshold, trim_threshold
     )
     return joined.select(
         idc,

@@ -258,6 +258,30 @@ def test_connected_components_raises_on_nonconvergence(spark):
         D.connected_components(pairs, max_iter=2)
 
 
+def test_minhash_signatures_rejects_wrong_shingle_frame(spark):
+    """A pre-built shingle frame is hashed as given (text_col/shingle_n
+    ignored), so anything but exactly (id_col, __sh) must raise instead
+    of yielding silently divergent signatures."""
+    import pytest
+
+    docs = spark.createDataFrame(
+        [(1, "alpha beta gamma delta")], "doc_id long, text string"
+    )
+    good = docs.select("doc_id", X.word_shingles("text", 3).alias("__sh"))
+    want = D.minhash_signatures(docs, "doc_id", "text", k=2).collect()
+    assert D.minhash_signatures(
+        docs, "doc_id", "text", k=2, shingled=good
+    ).collect() == want
+    for bad in (
+        docs.select("doc_id", X.word_shingles("text", 3).alias("sh")),
+        good.withColumn("text", F.lit("x")),
+        good.select("__sh", "doc_id"),
+        good.withColumnRenamed("doc_id", "id"),
+    ):
+        with pytest.raises(ValueError, match="__sh"):
+            D.minhash_signatures(docs, "doc_id", "text", k=2, shingled=bad)
+
+
 # ---------------------------------------------------------------------------
 # hash sampling
 # ---------------------------------------------------------------------------
@@ -727,6 +751,22 @@ def test_curation_run_decon_stages_once(spark):
         )
     # the stage is computed once: both derived frames share one checkpoint
     assert run._contamination() is run._contamination()
+
+
+def test_curation_decision_build_passes_session_to_threads(spark, sf_dir):
+    """The staged decision builds clusters and contamination spans on two
+    driver threads; each thread target must be wrapped with the session
+    so tags are inherited — pyspark warns when it is not."""
+    import warnings
+
+    from beacon_indexer_spark.plans.queries import QUERIES
+
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        QUERIES["doc_curation_decision"](spark, sf_dir)
+    assert not [
+        w for w in caught if "Tags will not be inherited" in str(w.message)
+    ]
 
 
 def test_curation_run_without_test_docs_rejects_decon(spark):

@@ -70,28 +70,23 @@ def _cc_expected(pairs):
 
 
 def test_cc_extra_jumps_equivalent_on_chains(spark):
-    """Any extra-jump depth converges to the same min-reachable labels —
-    chains force multiple rounds, so the jump ladder actually exercises
-    path compression (r13 CC change)."""
+    """The broadcast path converges to the min-reachable labels on chains —
+    chains force multiple rounds, so the one pointer jump per round
+    actually exercises path compression. (The name dates from when the
+    jump depth was a parameter; that parameter is gone, one jump remains.)"""
     from beacon_indexer_spark.operators.dedup import connected_components
 
     chain = [(i, i + 1) for i in range(1, 24)]
     extra = [(100, 101), (101, 103), (102, 103), (200, 300)]
     pairs = spark.createDataFrame(chain + extra, "id_a long, id_b long")
     want = _cc_expected(chain + extra)
-    for jumps in (0, 1, 3):
-        got = sorted(
-            map(
-                tuple,
-                connected_components(pairs, extra_jumps=jumps).collect(),
-            )
-        )
-        assert got == want, f"extra_jumps={jumps}"
+    got = sorted(map(tuple, connected_components(pairs).collect()))
+    assert got == want
 
 
 def test_cc_extra_jumps_shuffle_path_equivalent(spark):
-    """The shuffle fallback (broadcast_rows=None) ignores extra jumps by
-    design and still lands on the identical labels."""
+    """The shuffle fallback (broadcast_rows=None) lands on the identical
+    labels on a chain."""
     from beacon_indexer_spark.operators.dedup import connected_components
 
     chain = [(i, i + 1) for i in range(1, 16)]
@@ -100,9 +95,7 @@ def test_cc_extra_jumps_shuffle_path_equivalent(spark):
     got = sorted(
         map(
             tuple,
-            connected_components(
-                pairs, broadcast_rows=None, extra_jumps=3
-            ).collect(),
+            connected_components(pairs, broadcast_rows=None).collect(),
         )
     )
     assert got == want
